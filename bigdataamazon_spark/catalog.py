@@ -10,6 +10,7 @@ column (each testdata table ships a natural key; see FIXTURES.md).
 from __future__ import annotations
 
 import os
+import threading
 from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,6 +123,9 @@ def invalidate_tables(spark: SparkSession, sf_dir: str | None = None) -> int:
 
 _SHARED_CACHE: deque[DataFrame] = deque()
 _SHARED_CACHE_MAX = 32
+# the parity gate's thread pool and the ALS stats thread build queries
+# concurrently; one lock keeps append/evict/release atomic
+_SHARED_CACHE_LOCK = threading.Lock()
 
 
 def materialize_shared(df: DataFrame) -> DataFrame:
@@ -142,9 +146,10 @@ def materialize_shared(df: DataFrame) -> DataFrame:
     limit.
     """
     df = df.persist()
-    _SHARED_CACHE.append(df)
-    while len(_SHARED_CACHE) > _SHARED_CACHE_MAX:
-        _SHARED_CACHE.popleft().unpersist()
+    with _SHARED_CACHE_LOCK:
+        _SHARED_CACHE.append(df)
+        while len(_SHARED_CACHE) > _SHARED_CACHE_MAX:
+            _SHARED_CACHE.popleft().unpersist()
     return df
 
 
@@ -156,9 +161,10 @@ def release_shared() -> int:
     FIFO eviction calls this after consuming its results). Returns the
     number of handles released. Safe to call anytime: the next
     ``materialize_shared`` simply re-persists on demand."""
-    n = len(_SHARED_CACHE)
-    while _SHARED_CACHE:
-        _SHARED_CACHE.popleft().unpersist()
+    with _SHARED_CACHE_LOCK:
+        n = len(_SHARED_CACHE)
+        while _SHARED_CACHE:
+            _SHARED_CACHE.popleft().unpersist()
     return n
 
 

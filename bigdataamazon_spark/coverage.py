@@ -1,452 +1,39 @@
-"""Driver-coverage ledger: which registry entries already have a green
-driver CORRECTNESS row from a past round.
+"""Driver-coverage order, derived from the committed driver receipts.
 
-The driver verifies entries in ``queries()`` dict order and (empirically,
-round 1) covers a bounded prefix — exactly the first 50 names landed in
-``CORRECTNESS_r01.json``. To get every entry a hard driver-green row over
-the rounds, ``queries()`` orders never-verified entries FIRST and
-already-green entries last: each round's driver window then lands on the
-entries that still need a row, while the greens keep their recorded row
-from the round that produced it.
-
-Update per round: append the new round's hash-green names below.
+The driver verifies a bounded prefix of ``queries()`` against its DuckDB
+oracle each round and records the result in ``CORRECTNESS_r<N>.json`` at
+the repo root. A name counts as verified when its newest receipt has
+``hash_match: true``; ``order_for_driver`` puts every other name first,
+so the next driver window lands on entries that still need a green row.
+With no receipts the order is registration order.
 """
 
 from __future__ import annotations
 
-# hash_match == true rows in CORRECTNESS_r01.json (driver, sf0.01).
-GREEN_R01 = frozenset(
-    {
-        "all_account_balances",
-        "ann_topk",
-        "binary_metadata",
-        "bow_cosine_topk",
-        "bow_cosine_topk_sparse",
-        "bpe_token_counts",
-        "clean_numeric_props",
-        "content_dedup_docs",
-        "cosine_topk",
-        "curated_corpus",
-        "customer_order_revenue",
-        "customers_inactive_1995",
-        "describe_lineitem",
-        "discount_analysis",
-        "distinct_status_priority",
-        "distinct_users_by_type",
-        "doc_fingerprints",
-        "docs_contains_lookup",
-        "embedding_neardup_pairs",
-        "event_window_counts",
-        "events_variant_stats",
-        "json_extract_events",
-        "language_guess",
-        "lineitem_correlations",
-        "minhash_lsh_pairs",
-        "minhash_signatures",
-        "nations_with_high_balance_customers",
-        "ngram_jaccard_pairs",
-        "orders_duplicate_stats",
-        "orders_price_bands",
-        "orders_price_histogram",
-        "part_name_tokens",
-        "promo_revenue_share",
-        "q1_pricing_summary",
-        "q6_forecast_revenue",
-        "quality_scores",
-        "recommend_for_doc",
-        "simhash_neardup_pairs",
-        "simhash_signatures",
-        "sql_interface_revenue",
-        "star_join_revenue",
-        "stemmed_word_freq",
-        "supplier_balance_by_nation",
-        "token_stats",
-        "top_customers_by_balance",
-        "top_parts_per_brand",
-        "user_event_gaps",
-        "word_frequency",
-    }
-)
+import functools
+import json
+import re
+from pathlib import Path
 
-# hash_match == true rows in CORRECTNESS_r02.json (driver, sf0.01).
-GREEN_R02 = frozenset(
-    {
-        "audio_waveform_features",
-        "brand_price_quartiles",
-        "click_purchase_attribution",
-        "customer_order_distribution",
-        "daily_event_anomalies",
-        "discount_kde",
-        "disjunctive_part_revenue",
-        "doc_chunks",
-        "docs_decontaminated",
-        "docs_mixture_sample",
-        "event_sliding_counts",
-        "events_uniform_sample",
-        "idle_customer_balances",
-        "large_volume_customers",
-        "late_shipment_priority_counts",
-        "local_supplier_volume",
-        "multimodal_features",
-        "nation_trade_volume",
-        "national_market_share",
-        "neardup_clusters",
-        "order_value_deciles",
-        "orders_upsert_merge",
-        "part_cf_recommendations",
-        "pii_redaction",
-        "purchase_asof_signup",
-        "python_datasource_bucket_stats",
-        "quantized_embeddings",
-        "referential_audit",
-        "repetition_scores",
-        "returned_item_customers",
-        "revenue_rollup",
-        "rolling_revenue_7d",
-        "segment_dedup_docs",
-        "segment_nation_overlap",
-        "shipping_priority_top10",
-        "signup_funnel",
-        "small_quantity_revenue",
-        "status_priority_cube",
-        "tfidf_cosine_topk",
-        "top_supplier_revenue",
-        "training_shards",
-        "user_sessions",
-        "video_frame_samples",
-        "waiting_multi_supplier_orders",
-    }
-)
-
-# hash_match == true rows in CORRECTNESS_r04.json (driver, sf0.01).
-GREEN_R04 = frozenset(
-    {
-        "als_factorization_audit",
-        "ann_recall_audit",
-        "cdc_chunks",
-        "copurchase_part_lift",
-        "copurchase_part_lift_rel",
-        "csv_roundtrip_orders_agg",
-        "custkey_skew_report",
-        "doc_perplexity_scores",
-        "doc_url_extract",
-        "docs_split_assignment",
-        "docs_weighted_sample",
-        "dominant_part_suppliers",
-        "dsir_importance_weights",
-        "embedding_centroids",
-        "event_series_correlation",
-        "events_hourly_gapfill",
-        "frequent_part_itemsets_rel",
-        "fuzzy_brand_probe",
-        "hll_union_audit",
-        "html_strip_docs",
-        "important_part_stock",
-        "json_roundtrip_events_agg",
-        "lineitem_measures_unpivot",
-        "logreg_quality_classifier",
-        "min_cost_supplier_region",
-        "ml_bow_pipeline",
-        "nation_top_customers_listagg",
-        "nation_trade_pagerank",
-        "neardup_canonical_docs",
-        "orc_roundtrip_lineitem_agg",
-        "order_price_equidepth",
-        "order_priority_pivot",
-        "orders_mom_growth",
-        "packed_sequences",
-        "parquet_partition_prune_agg",
-        "part_profit_by_nation_year",
-        "pretraining_manifest",
-        "priority_flag_summary",
-        "priority_status_mode",
-        "quantile_sketch_audit",
-        "quantity_price_spearman",
-        "repeated_span_dedup",
-        "returnflag_price_regression",
-        "signup_retention_cohorts",
-        "supplier_part_concentration",
-        "supplier_price_band_orders",
-        "tfidf_doc_keywords",
-        "urgent_mix_by_returnflag",
-        "user_state_scd2",
-        "winsorized_price_stats",
-    }
-)
-
-# hash_match == true rows in CORRECTNESS_r05.json (driver, sf0.01).
-GREEN_R05 = frozenset(
-    {
-        "ab_conversion_ztest",
-        "benford_price_digits",
-        "bigram_lm_pmi",
-        "bm25_search",
-        "bow_cosine_topk_dfcap",
-        "bpe_learned_merges",
-        "cdc_chunk_dedup",
-        "curriculum_phase_stats",
-        "customer_revenue_gini",
-        "data_quality_dashboard",
-        "docs_stratified_fixed_n",
-        "embedding_dim_covariance",
-        "events_dow_hour_profile",
-        "events_per_user_sample",
-        "gopher_quality_flags",
-        "image_feature_topk",
-        "imputed_event_values",
-        "incremental_daily_counts",
-        "kneser_ney_bigram_lm",
-        "lang_token_fertility",
-        "monthly_revenue_ewma",
-        "monthly_revenue_seasonality",
-        "nation_part_jaccard",
-        "nation_ship_lead_time",
-        "ngram_jaccard_pairs_prefix",
-        "order_total_reconciliation",
-        "orders_content_checksum",
-        "orders_snapshot_diff",
-        "part_entity_resolution",
-        "part_fuzzy_name_pairs",
-        "priority_price_iqr_outliers",
-        "priority_price_moments",
-        "priority_segment_chisq",
-        "priority_transition_matrix",
-        "quantity_discount_heatmap",
-        "returnflag_price_mad",
-        "revenue_lorenz_deciles",
-        "revenue_pareto_ratio",
-        "rolling_wau_7d",
-        "segment_balance_ks",
-        "semantic_dedup_keepers",
-        "sft_loss_mask_stats",
-        "supplier_cosupply_triangles",
-        "table_profile_lineitem",
-        "token_budget_allocation",
-        "unicode_nfc_docs",
-        "user_churn_survival",
-        "user_grouped_split",
-        "user_value_twap",
-        "winnowing_fingerprint_pairs",
-    }
-)
-
-# hash_match == true rows in CORRECTNESS_r06.json (driver, sf0.01).
-GREEN_R06 = frozenset(
-    {
-        "approx_quantile_audit",
-        "bloom_join_audit",
-        "bpe_encoded_vocab",
-        "cosupply_ktruss_edges",
-        "cumulative_unique_users",
-        "customer_order_overlaps",
-        "customer_part_butterflies",
-        "customer_rfm_segments",
-        "daily_revenue_rolling_median",
-        "event_sequence_conversions",
-        "events_ohlc_daily",
-        "frequent_part_itemsets_ml",
-        "hashed_doc_features",
-        "heavy_hitter_words",
-        "hll_distinct_audit",
-        "hll_intersection_audit",
-        "holt_linear_revenue",
-        "intra_doc_dedup",
-        "ipf_mixture_raking",
-        "join_size_estimate_audit",
-        "merged_schema_orders_agg",
-        "minhash_accuracy_audit",
-        "ml_embedding_summary",
-        "ml_linear_regression_audit",
-        "mmr_diversified_search",
-        "multi_touch_attribution",
-        "naive_bayes_source_classifier",
-        "nation_supplier_hhi",
-        "null_semantics_audit",
-        "orders_backlog_timeline",
-        "quantity_weighted_median_price",
-        "recursive_trade_reach",
-        "revenue_autocorrelation",
-        "revenue_cusum_changepoint",
-        "revenue_decimal_exact",
-        "revenue_grouping_sets",
-        "revenue_yoy_growth",
-        "salted_join_revenue",
-        "segment_target_encoding",
-        "session_entry_exit",
-        "shipment_sla_by_priority",
-        "supplier_kcore_members",
-        "symspell_part_matches",
-        "token_zipf_fit",
-        "user_activity_streaks",
-        "user_event_history_features",
-        "value_psi_drift",
-        "value_quantile_normalized",
-        "variant_props_extraction",
-        "vocab_shift_report",
-    }
-)
-
-# hash_match == true rows in CORRECTNESS_r07.json (driver, sf0.01).
-GREEN_R07 = frozenset(
-    {
-        "approx_order_stats",
-        "audio_similarity_topk",
-        "bow_cosine_topk",
-        "bow_cosine_topk_sparse",
-        "cms_word_count_audit",
-        "conformal_price_interval",
-        "consistent_hash_rebalance_audit",
-        "contrastive_negatives",
-        "cosine_topk",
-        "cosine_topk_ivf",
-        "cosine_topk_lsh",
-        "customer_k_anonymity",
-        "customer_l_diversity",
-        "dbscan_embedding_clusters",
-        "decision_stump_audit",
-        "doc_readability",
-        "doc_sentiment_scores",
-        "filtered_ann_topk",
-        "forecast_backtest_accuracy",
-        "frequent_event_sequences",
-        "hybrid_rank_fusion",
-        "incremental_join_maintenance",
-        "lateral_top_orders_per_segment",
-        "ml_als_top_recs",
-        "ml_minhash_neardup_pairs",
-        "nation_trade_bfs_hops",
-        "nation_trade_communities",
-        "nation_trade_ppr",
-        "neardup_clusters",
-        "order_price_bootstrap_ci",
-        "part_name_autocomplete",
-        "part_price_size_skyline",
-        "phrase_search_positional",
-        "priority_status_mutual_info",
-        "purged_time_splits",
-        "quantity_woe_iv",
-        "regression_calibration_bins",
-        "retrieval_eval_metrics",
-        "revenue_m4_downsample",
-        "revenue_window_motifs",
-        "ridge_cv_model_selection",
-        "source_temperature_mixing",
-        "sql_udf_revenue_bands",
-        "stemmed_word_freq",
-        "tfidf_cosine_topk",
-        "theil_sen_trend",
-        "top_event_trigram_paths",
-        "user_balance_clamped",
-        "xml_roundtrip_orders_agg",
-        "zorder_layout_skipping_audit",
-    }
-)
-
-# hash_match == true rows in CORRECTNESS_r08.json (driver, sf0.01).
-GREEN_R08 = frozenset(
-    {
-        "ab_sample_size_planning",
-        "ab_sprt_decision",
-        "adamic_adar_link_prediction",
-        "arrow_native_embedding_norms",
-        "ate_stratified",
-        "bigram_gtest_collocations",
-        "brand_bradley_terry",
-        "capture_recapture_user_estimate",
-        "colbert_maxsim_topk",
-        "context_window_fit_audit",
-        "cuped_variance_reduction",
-        "daily_mix_drift_chisq",
-        "doc_textrank_summary",
-        "dp_noisy_nation_counts",
-        "embedding_neardup_pairs",
-        "embedding_pca_top_component",
-        "event_burstiness_fano",
-        "fellegi_sunter_field_weights",
-        "functional_dependency_audit",
-        "hits_authority_scores",
-        "image_feature_topk",
-        "image_phash_neardup",
-        "ips_offpolicy_value",
-        "kmeans_embedding_clusters",
-        "kmeans_silhouette_audit",
-        "kn_doc_perplexity",
-        "length_bucketed_batches",
-        "linear_shap_attributions",
-        "matryoshka_truncation_recall",
-        "minhash_lsh_pairs",
-        "multimodal_features",
-        "nation_balance_fdr_tests",
-        "part_name_fuzzy_pairs",
-        "pca_projection_histogram",
-        "popularity_negative_samples",
-        "pq_codebook_audit",
-        "preference_pairs_by_quality",
-        "quality_rater_agreement",
-        "quantile_regression_grid",
-        "rdd_discontinuity_estimate",
-        "revenue_diff_in_diff",
-        "robust_median_of_means",
-        "rocchio_prf_search",
-        "simhash_neardup_pairs",
-        "source_loo_contribution",
-        "t_closeness_audit",
-        "text_token_dropout_augment",
-        "timeseries_delta_encoding_audit",
-        "video_frame_samples",
-        "vocab_coverage_curve",
-    }
-)
-
-DRIVER_VERIFIED: frozenset[str] = (
-    GREEN_R01 | GREEN_R02 | GREEN_R04 | GREEN_R05 | GREEN_R06 | GREEN_R07
-    | GREEN_R08
-)
-
-# Round-9 window (VERDICT r08, action #1): re-attest one representative
-# of the LSH-stage entries affected by r08's `_lsh_shuffle_partitions`
-# shuffle-sizing fix (byte-identical plans below ~500k rows, but verify
-# anyway) — embedding_neardup_pairs — plus video_frame_samples, whose
-# RIFF/AVI rewire landed mid-r08 after its green row. r09 in-round
-# additions that changed plans post-r08-row: multimodal_features and
-# image_feature_topk (IHDR-routed PNG decode + vectorized unfilter),
-# stemmed_word_freq (tokenizer regex pinned to an explicit class on
-# both engines); the two simhash entries (the banded route now bands
-# the occupied signature width and the eager routing count became a
-# count+min/max agg — results byte-identical, BNLJ at sf sizes, but
-# the operator changed so the driver re-attests). The remaining ~43
-# window slots fill with the never-verified backlog (169 names after
-# r08) in registration order.
-PRIORITY: tuple[str, ...] = (
-    "embedding_neardup_pairs",
-    "video_frame_samples",
-    "multimodal_features",
-    "image_feature_topk",
-    "stemmed_word_freq",
-    "simhash_neardup_pairs",
-    "simhash_signatures",
-)
+RECEIPTS_DIR = Path(__file__).resolve().parent.parent
+_RECEIPT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-# No-oracle entries: none since r07. approx_order_stats was drained in
-# the r06 closing session (exact group stats + sketch-tolerance flags);
-# cosine_topk_lsh gained a full SQL replay oracle (seeded hyperplanes
-# as literals, the ann_recall_audit mechanism); cosine_topk_ivf,
-# ml_minhash_neardup_pairs and ml_als_top_recs were restructured into
-# self-auditing form (exact replayable columns + tolerance contract
-# flags) because KMeans / Spark-internal hash seeds / iterative ALS are
-# not SQL-expressible. The set stays for order_for_driver's contract.
-ROWS_ONLY_BY_CONTRACT: frozenset[str] = frozenset()
+@functools.cache
+def verified(receipts_dir: Path) -> frozenset[str]:
+    """Names whose newest receipt (numeric round order) is hash-green."""
+    found = {int(m[1]): p for p in receipts_dir.iterdir() if (m := _RECEIPT.fullmatch(p.name))}
+    newest: dict[str, bool] = {}
+    for rnd in sorted(found):
+        for name, row in json.loads(found[rnd].read_text()).items():
+            newest[name] = bool(row.get("hash_match"))
+    return frozenset(n for n, green in newest.items() if green)
 
 
 def order_for_driver(names: list[str]) -> list[str]:
-    """Priority entries first (even if already driver-verified — the
-    PRIORITY list exists to re-attest entries whose code changed after
-    their green row), then never-driver-verified entries (registration
-    order kept in each group), verified and rows-only entries last."""
-    prio = [n for n in PRIORITY if n in names]
-    done_set = DRIVER_VERIFIED | ROWS_ONLY_BY_CONTRACT
-    rest = set(prio) | done_set
-    pending = [n for n in names if n not in rest]
-    done = [n for n in names if n in done_set and n not in set(prio)]
-    return prio + pending + done
+    """Unverified names first, then verified; registration order in each."""
+    done = verified(RECEIPTS_DIR)
+    return [n for n in names if n not in done] + [n for n in names if n in done]
+
+
+verified(RECEIPTS_DIR)

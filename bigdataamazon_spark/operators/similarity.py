@@ -989,8 +989,12 @@ def _kmeans_local(
     """Seeded Lloyd's (k-means++ init) over an in-memory matrix —
     deterministic given (mat order, seed). The driver-side quantizer
     fit for audit-sized corpora; vectorized numpy throughout."""
-    rng = np.random.RandomState(seed)
     n = mat.shape[0]
+    if n == 0:
+        # empty corpus (a 1-D np.array([]) has no width): no centroids,
+        # so ivf_topk returns the empty table like cosine_topk does
+        return np.empty((0, mat.shape[1] if mat.ndim == 2 else 0))
+    rng = np.random.RandomState(seed)
     k = min(n_clusters, n)
     centers = np.empty((k, mat.shape[1]), dtype=np.float64)
     centers[0] = mat[rng.randint(n)]

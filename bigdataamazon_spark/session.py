@@ -25,6 +25,15 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set; else 16g, or a quarter of
+    physical memory (the JVM's own default) when 16g exceeds it."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    return "16g" if mem_mb >= 16 * 1024 else f"{mem_mb // 4}m"
+
+
 def get_spark(app_name: str = DEFAULT_APP_NAME, *, ui: bool = False) -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
     cpus = cpu_count()
@@ -39,9 +48,9 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, ui: bool = False) -> SparkSes
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode = driver IS the executor: 32 task threads share this
         # heap, and persisted blocks live in it too. 8g showed GC-driven
-        # timing outliers under memory-heavy text queries; 16g is still
-        # an eighth of the box.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # timing outliers under memory-heavy text queries; 16g is an
+        # eighth of a 128 GB box, but more than a 15 GB host can give.
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "true" if ui else "false")
         # testdata parquet files are single small files; keep splits sane
         .config("spark.sql.files.maxPartitionBytes", "134217728")

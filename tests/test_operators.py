@@ -715,7 +715,9 @@ def test_bow_auto_empty_input_routes_dense_and_returns_empty(spark):
     """ADVICE r09: the one-pass rollup router gets ZERO rows from an
     empty counts table (no grand-total row, unlike the old global agg),
     which crashed rows[0]. Empty input must route (nd=0, nv=0 → dense)
-    and return an empty neighbor table, not raise."""
+    and return an empty neighbor table, not raise. The IVF path gets the
+    same guard: an empty corpus fits zero centroids instead of raising
+    in the seeded k-means++ init."""
     from bigdataamazon_spark.operators import similarity
 
     cnt = spark.createDataFrame([], "doc_id bigint, word string, c bigint")
@@ -723,6 +725,14 @@ def test_bow_auto_empty_input_routes_dense_and_returns_empty(spark):
         out = similarity.bow_topk_auto(cnt, k=3, tfidf=tfidf)
         assert out.count() == 0
         assert set(out.columns) == {"src", "dst", "score", "rank"}
+
+    emb = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
+    centroids = similarity.ivf_fit_centroids_local(emb)
+    assert centroids.shape[0] == 0
+    out = similarity.ivf_topk(emb, k=3, centroids=centroids)
+    assert out.count() == 0
+    assert set(out.columns) == {"src", "dst", "score", "rank"}
+    assert similarity.cosine_topk(emb, k=3).count() == 0
 
 
 def test_bow_auto_fallback_applies_absolute_df_cap(spark):

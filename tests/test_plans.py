@@ -17,6 +17,9 @@ from bigdataamazon_spark.plans import executed_plan, final_plan, scan_schemas
 
 
 def _executed_plan(spark, name: str, sf_dir: str) -> str:
+    # cache-isolated: a relation cached by an earlier test would show up
+    # as an InMemoryTableScan and change the pinned operators
+    spark.catalog.clearCache()
     return executed_plan(registry.queries()[name](spark, sf_dir))
 
 

@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""Round-10 optimization profiler: isolated timings + formatted plans.
+"""Optimization profiler: isolated timings + formatted plans.
 
 Usage:
-    python tools/profile_r10.py plans  [name ...]   # dump explain("formatted")
-    python tools/profile_r10.py time   [name ...]   # warm + min-of-2 count()
-    python tools/profile_r10.py both   [name ...]
+    python tools/profile.py plans  [name ...]   # dump explain("formatted")
+    python tools/profile.py time   [name ...]   # warm + min-of-2 count()
+    python tools/profile.py both   [name ...]
 
-Defaults to the bench HEADLINE list. Plans go to plans/r10/<name>_<tag>.txt
+Defaults to the bench HEADLINE list. Plans go to plans/<tag>/<name>.txt
 (tag via $PROFILE_TAG, default "before"). Timing methodology matches
 bench.py exactly (warm count, then min of two timed counts, clearCache
 between queries) so numbers are comparable to BENCH_r0N.json.
@@ -40,10 +40,10 @@ def main() -> None:
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     tag = os.environ.get("PROFILE_TAG", "before")
-    out_dir = os.path.join(_REPO_ROOT, "plans", "r10")
+    out_dir = os.path.join(_REPO_ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("bigdataamazon-profile-r10")
+    spark = get_spark("bigdataamazon-profile")
     qs = registry.queries()
     timings: dict[str, float] = {}
     for name in names:
@@ -52,7 +52,7 @@ def main() -> None:
         if mode in ("plans", "both"):
             try:
                 txt = explain_formatted(fn(spark, sf_dir))
-                with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+                with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
                     f.write(txt)
             except Exception as e:  # noqa: BLE001
                 print(f"PLAN-ERR {name}: {type(e).__name__}: {e}", file=sys.stderr)

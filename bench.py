@@ -272,20 +272,33 @@ def _per_query_shard_lines(
     so two complete shards plus a worst-case (~600-char, 30-error)
     compact line always fit a 2000-char tail."""
     header = {"metric": "headline_query_wall_clock_total", "unit": "sec", "sf": sf}
-    base = len(json.dumps({**header, "pq_shard": 99, "pq_nshards": 99, "queries": {}}))
-    shards_rev: list[dict[str, float]] = []
-    cur_rev: list[tuple[str, float]] = []
-    used = base
-    for name, t in reversed(list(timings.items())):
-        entry = len(json.dumps({name: round(t, 2)})) + 1
-        if cur_rev and used + entry > max_chars:
+
+    def pack(placeholder: int) -> list[dict[str, float]]:
+        # ``placeholder`` stands in for the widest shard number, so the
+        # base length holds as many digits as the real numbers will
+        base = len(json.dumps(
+            {**header, "pq_shard": placeholder, "pq_nshards": placeholder, "queries": {}}
+        ))
+        shards_rev: list[dict[str, float]] = []
+        cur_rev: list[tuple[str, float]] = []
+        used = base
+        for name, t in reversed(list(timings.items())):
+            entry = len(json.dumps({name: round(t, 2)})) + 1
+            if cur_rev and used + entry > max_chars:
+                shards_rev.append(dict(reversed(cur_rev)))
+                cur_rev, used = [], base
+            cur_rev.append((name, round(t, 2)))
+            used += entry
+        if cur_rev:
             shards_rev.append(dict(reversed(cur_rev)))
-            cur_rev, used = [], base
-        cur_rev.append((name, round(t, 2)))
-        used += entry
-    if cur_rev:
-        shards_rev.append(dict(reversed(cur_rev)))
-    shards = list(reversed(shards_rev))
+        return list(reversed(shards_rev))
+
+    placeholder = 99
+    shards = pack(placeholder)
+    # 100+ shards: re-pack until the placeholder is as wide as the count
+    while len(shards) > placeholder:
+        placeholder = 10 ** len(str(len(shards))) - 1
+        shards = pack(placeholder)
     return [
         json.dumps(
             {**header, "pq_shard": i + 1, "pq_nshards": len(shards), "queries": s}

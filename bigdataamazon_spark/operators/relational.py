@@ -80,18 +80,28 @@ def histogram_with_edges(df: DataFrame, col: str, bins: int) -> DataFrame:
 
 def describe_column(df: DataFrame, col: str, *, round_to: int = 4) -> DataFrame:
     """One row of A2's describe() (``amazon1.py:62``) with EXACT
-    percentiles (pandas parity; Spark's summary() is approximate)."""
+    percentiles (pandas parity; Spark's summary() is approximate).
+
+    p25/p50/p75 come from ONE ``percentile(c, array(...))`` aggregate
+    indexed afterwards: the same exact algorithm as three scalar
+    ``percentile`` calls, so the values are identical, but the column's
+    values are buffered and sorted once instead of three times."""
     c = F.col(col)
+    q = F.col("_quartiles")
     return df.agg(
         F.lit(col).alias("col_name"),
         F.count(c).alias("n"),
         F.round(F.avg(c), round_to).alias("mean"),
         F.round(F.stddev(c), round_to).alias("std"),
         F.round(F.min(c), round_to).alias("min"),
-        F.round(F.percentile(c, 0.25), round_to).alias("p25"),
-        F.round(F.percentile(c, 0.5), round_to).alias("p50"),
-        F.round(F.percentile(c, 0.75), round_to).alias("p75"),
+        F.percentile(c, [0.25, 0.5, 0.75]).alias("_quartiles"),
         F.round(F.max(c), round_to).alias("max"),
+    ).select(
+        "col_name", "n", "mean", "std", "min",
+        F.round(q[0], round_to).alias("p25"),
+        F.round(q[1], round_to).alias("p50"),
+        F.round(q[2], round_to).alias("p75"),
+        "max",
     )
 
 

@@ -8,14 +8,20 @@ Every figure's COMPUTE runs distributed through the already-registered,
 oracle-checked queries; this module only collects the bounded results
 and hands them to the pure-string SVG renderers (``sources/svg.py``).
 The one new projection — the scatter sample — is a deterministic
-md5-keyed top-N (no ``orderBy(rand())``, no full collect), so the whole
-report costs exactly what its aggregates cost at any corpus size.
+md5-keyed top-N (no ``orderBy(rand())``, no full collect), so no figure
+costs more than its aggregates at any corpus size. The eight sections
+run as concurrent Spark jobs, so the page costs its slowest section
+(describe's exact ``l_extendedprice`` quartiles), not the sum of all
+eight.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .catalog import load_table
 from .sources import html as html_sink
@@ -44,26 +50,23 @@ def _collect_xy(df: DataFrame, x: str, y: str, cap: int) -> list[tuple[float, fl
     return [(float(r[x]), float(r[y])) for r in df.limit(cap).collect()]
 
 
-def build_report_figures(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    """(section_title, html_fragment) list for the reference dashboard.
+def _describe_section(q, spark, sf_dir, tables) -> str:
+    return html_sink.to_html_table(q["describe_lineitem"](spark, sf_dir), max_rows=30)
 
-    Pulls from the registry so each figure's numbers are the
-    hash-verified ones; the per-figure caps are generous multiples of
-    the aggregates' true sizes (30 bins, 6 grid points, 3 corr pairs,
-    |V|≈29 words) — they exist so a regressed upstream can never turn
-    a figure into an unbounded collect."""
-    from . import queries as registry
 
-    q = registry.queries()
+def _top_customers_section(q, spark, sf_dir, tables) -> str:
+    return html_sink.to_html_table(
+        q["top_customers_by_balance"](spark, sf_dir), max_rows=10
+    )
 
+
+def _histogram_section(q, spark, sf_dir, tables) -> str:
     # histogram_with_edges single-sources the bin arithmetic with the
     # registered histogram query (same bounds agg, same width formula)
     from .operators.relational import histogram_with_edges
 
     hist_rows = (
-        histogram_with_edges(load_table(spark, sf_dir, "orders"), "o_totalprice", 30)
-        .limit(1000)
-        .collect()
+        histogram_with_edges(tables["orders"], "o_totalprice", 30).limit(1000).collect()
     )
     # histogram() groups NULL values into a bucket=NULL row whose
     # lo/hi are NULL — skip it rather than crash the whole page
@@ -72,17 +75,21 @@ def build_report_figures(spark: SparkSession, sf_dir: str) -> list[tuple[str, st
         for r in hist_rows
         if r["lo"] is not None and r["hi"] is not None
     ]
-    hist_svg = svg_mod.svg_histogram(
+    return svg_mod.svg_histogram(
         bins, title="Order Total Price (30-bin histogram)",
         x_label="o_totalprice", y_label="orders",
     )
 
+
+def _kde_section(q, spark, sf_dir, tables) -> str:
     kde_pts = _collect_xy(q["discount_kde"](spark, sf_dir), "x", "density", 1000)
-    kde_svg = svg_mod.svg_line(
+    return svg_mod.svg_line(
         kde_pts, title="Lineitem Discount KDE (bw=0.02)",
         x_label="l_discount", y_label="density",
     )
 
+
+def _heatmap_section(q, spark, sf_dir, tables) -> str:
     corr_row = q["lineitem_correlations"](spark, sf_dir).first()
     pairs = {}
     for c in corr_row.asDict():
@@ -97,8 +104,32 @@ def build_report_figures(spark: SparkSession, sf_dir: str) -> list[tuple[str, st
                     pairs[(a, body[len(a) + 1:])] = float(corr_row[c])
                 break
     labels = sorted({k for p in pairs for k in p})
-    heat_svg = svg_mod.svg_heatmap(labels, pairs)
+    return svg_mod.svg_heatmap(labels, pairs)
 
+
+def _scatter_section(q, spark, sf_dir, tables) -> str:
+    return svg_mod.svg_scatter(
+        _collect_xy(
+            scatter_sample(tables["lineitem"], "l_extendedprice", "l_quantity"),
+            "x", "y", 300,
+        ),
+        title="Price vs. Quantity (deterministic 300-row sample)",
+        x_label="l_extendedprice", y_label="l_quantity",
+    )
+
+
+def _scatter_log_section(q, spark, sf_dir, tables) -> str:
+    return svg_mod.svg_scatter(
+        _collect_xy(
+            scatter_sample(tables["lineitem"], "l_extendedprice", "l_discount"),
+            "x", "y", 300,
+        ),
+        title="Discount vs. Price (log-x, deterministic sample)",
+        x_label="l_extendedprice", y_label="l_discount", log_x=True,
+    )
+
+
+def _wordcloud_section(q, spark, sf_dir, tables) -> str:
     # top-N BY COUNT, deterministic tiebreak — a bare limit() takes
     # whichever rows arrive first and silently drops the most frequent
     # words on any corpus with >500 distinct words. orderBy+limit plans
@@ -110,37 +141,57 @@ def build_report_figures(spark: SparkSession, sf_dir: str) -> list[tuple[str, st
         .limit(500)
         .collect()
     ]
-    cloud_svg = svg_mod.svg_wordcloud(words, title="Document Word Frequency")
+    return svg_mod.svg_wordcloud(words, title="Document Word Frequency")
 
-    li = load_table(spark, sf_dir, "lineitem")
-    sc1 = svg_mod.svg_scatter(
-        _collect_xy(scatter_sample(li, "l_extendedprice", "l_quantity"), "x", "y", 300),
-        title="Price vs. Quantity (deterministic 300-row sample)",
-        x_label="l_extendedprice", y_label="l_quantity",
-    )
-    sc2 = svg_mod.svg_scatter(
-        _collect_xy(scatter_sample(li, "l_extendedprice", "l_discount"), "x", "y", 300),
-        title="Discount vs. Price (log-x, deterministic sample)",
-        x_label="l_extendedprice", y_label="l_discount", log_x=True,
-    )
 
-    describe_tbl = html_sink.to_html_table(
-        q["describe_lineitem"](spark, sf_dir), max_rows=30
-    )
-    top_tbl = html_sink.to_html_table(
-        q["top_customers_by_balance"](spark, sf_dir), max_rows=10
-    )
+# page order; each section is one independent group of Spark jobs
+_SECTIONS = [
+    ("Summary statistics (describe)", _describe_section),
+    ("Top customers by balance", _top_customers_section),
+    ("Histogram", _histogram_section),
+    ("KDE", _kde_section),
+    ("Correlation heatmap", _heatmap_section),
+    ("Scatter", _scatter_section),
+    ("Scatter (log x)", _scatter_log_section),
+    ("Word frequency cloud", _wordcloud_section),
+]
+# every table a section reads, directly or through its registry query
+_REPORT_TABLES = ("orders", "lineitem", "customer", "documents")
 
-    return [
-        ("Summary statistics (describe)", describe_tbl),
-        ("Top customers by balance", top_tbl),
-        ("Histogram", hist_svg),
-        ("KDE", kde_svg),
-        ("Correlation heatmap", heat_svg),
-        ("Scatter", sc1),
-        ("Scatter (log x)", sc2),
-        ("Word frequency cloud", cloud_svg),
-    ]
+
+def build_report_figures(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
+    """(section_title, html_fragment) list for the reference dashboard.
+
+    Pulls from the registry so each figure's numbers are the
+    hash-verified ones; the per-figure caps are generous multiples of
+    the aggregates' true sizes (30 bins, 6 grid points, 3 corr pairs,
+    |V|≈29 words) — they exist so a regressed upstream can never turn
+    a figure into an unbounded collect.
+
+    The sections are independent, so each runs on its own thread and
+    Spark schedules their jobs side by side. Each thread inherits the
+    caller's local properties (job group included) and names its jobs
+    ``report:<title>``; results come back in page order, and the first
+    failing section (in that order) raises its own exception."""
+    from . import queries as registry
+
+    # resolved here, once: the threads only read the registry dict and
+    # the memoized table handles
+    q = registry.queries()
+    tables = {t: load_table(spark, sf_dir, t) for t in _REPORT_TABLES}
+
+    def run(title, section):
+        spark.sparkContext.setJobDescription(f"report:{title}")
+        return section(q, spark, sf_dir, tables)
+
+    with ThreadPoolExecutor(max_workers=len(_SECTIONS)) as pool:
+        futures = [
+            # wrapped per section: each wrapper holds its own copy of the
+            # caller's properties, so one thread's description stays its own
+            pool.submit(inheritable_thread_target(spark)(run), title, section)
+            for title, section in _SECTIONS
+        ]
+        return [(title, f.result()) for (title, _), f in zip(_SECTIONS, futures)]
 
 
 def write_analytics_report(

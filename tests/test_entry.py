@@ -91,3 +91,19 @@ def test_bench_emit_lines_contract():
         json.loads(bench.emit_lines(timings, {}, 0.1)[-1]),
     )
     assert "n_errors" not in d2 and "n_errors" not in c2 and "failed" not in c2
+    # 100+ shards: three-digit shard numbers still keep every line in
+    # the bound, and the merge is still lossless
+    many = {f"q{i:05d}_{'x' * (i % 40)}": 1234.5 for i in range(3000)}
+    big = [json.loads(ln) for ln in bench._per_query_shard_lines(many, 0.1)]
+    assert len(big) >= 100
+    assert all(len(json.dumps(s)) <= 620 for s in big)
+    assert [s["pq_shard"] for s in big] == list(range(1, len(big) + 1))
+    assert {k: v for s in big for k, v in s["queries"].items()} == many
+    # a shard holds at least one name whole, so the bound rests on every
+    # registry name fitting one shard on its own (no runtime truncation)
+    from bigdataamazon_spark import queries as registry
+
+    for name in registry.queries():
+        [line] = bench._per_query_shard_lines({name: 99999.99}, 0.1)
+        widest = {**json.loads(line), "pq_shard": 9999, "pq_nshards": 9999}
+        assert len(json.dumps(widest)) <= 620, name

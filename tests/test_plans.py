@@ -1773,3 +1773,33 @@ def test_image_feature_topk_broadcast_gemm_one_column_scan(spark, sf_dir):
     assert plan.count("Exchange") == 1
     for op in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
         assert op not in plan
+
+
+def test_describe_one_exact_percentile_aggregate_per_column(spark, sf_dir):
+    """describe() buffers each column once: p25/p50/p75 index one
+    ``percentile(c, array(...))`` aggregate (3 for 3 columns, not 9),
+    and the rows equal the one-``percentile``-per-quantile form."""
+    from pyspark.sql import functions as F
+
+    from bigdataamazon_spark.catalog import load_table
+
+    df = registry.queries()["describe_lineitem"](spark, sf_dir)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("percentile(") == 3, optimized
+
+    li = load_table(spark, sf_dir, "lineitem")
+    explicit = None
+    for col in ("l_quantity", "l_extendedprice", "l_discount"):
+        c = F.col(col)
+        row = li.agg(
+            F.lit(col).alias("col_name"),
+            F.count(c).alias("n"),
+            F.round(F.avg(c), 4).alias("mean"),
+            F.round(F.stddev(c), 4).alias("std"),
+            F.round(F.min(c), 4).alias("min"),
+            *[F.round(F.percentile(c, p), 4).alias(f"p{int(p * 100)}")
+              for p in (0.25, 0.5, 0.75)],
+            F.round(F.max(c), 4).alias("max"),
+        )
+        explicit = row if explicit is None else explicit.unionByName(row)
+    assert df.collect() == explicit.collect()

@@ -114,3 +114,63 @@ def test_analytics_report_end_to_end(spark, sf_dir, tmp_path):
     ):
         assert section in doc
     assert doc.count("<svg") == 6  # hist, kde, heatmap, 2 scatters, cloud
+
+
+def test_report_sections_stay_in_the_callers_job_group(spark, sf_dir):
+    """Section threads inherit the caller's job group (so a traced span
+    still owns every report job) and name their jobs per figure."""
+    from bigdataamazon_spark.report import build_report_figures
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("rpt", "report job-group test")
+    try:
+        sections = build_report_figures(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = tracker.getJobIdsForGroup("rpt")
+    assert len(jobs) >= len(sections) == 8
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    store = sc._jsc.sc().statusStore()
+    descriptions = {
+        d.get() for d in (store.job(j).description() for j in jobs) if d.isDefined()
+    }
+    assert {f"report:{t}" for t, _ in sections} <= descriptions
+
+
+def test_report_sections_are_deterministic_and_in_page_order(spark, sf_dir):
+    from bigdataamazon_spark.report import build_report_figures
+
+    first = build_report_figures(spark, sf_dir)
+    assert build_report_figures(spark, sf_dir) == first
+    assert [t for t, _ in first] == [
+        "Summary statistics (describe)",
+        "Top customers by balance",
+        "Histogram",
+        "KDE",
+        "Correlation heatmap",
+        "Scatter",
+        "Scatter (log x)",
+        "Word frequency cloud",
+    ]
+
+
+def test_report_section_failure_raises_the_original_error(spark, sf_dir, monkeypatch):
+    """A section that fails on its pool thread surfaces its own
+    exception to the caller, not a wrapper or a missing-result error."""
+    from bigdataamazon_spark import queries as registry
+    from bigdataamazon_spark.report import build_report_figures
+
+    boom = RuntimeError("boom")
+
+    def failing(spark, sf_dir):
+        raise boom
+
+    monkeypatch.setitem(registry._QUERIES, "discount_kde", failing)
+    with pytest.raises(RuntimeError) as excinfo:
+        build_report_figures(spark, sf_dir)
+    assert excinfo.value is boom
